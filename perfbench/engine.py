@@ -17,8 +17,6 @@ def configure_env(root: str, work: str) -> None:
     before the engine's modules are imported (they read SPARK_GRAFT_* at
     import time)."""
     os.environ["SPARK_GRAFT_CPUS"] = CPUS
-    # the session sizes shuffles from this dir; keep it inside the work dir
-    os.environ["SPARK_GRAFT_SF_DIR"] = os.path.join(work, "data")
     # Spark's Python workers import the engine and the benchmark's sleeper
     # by module path; a checkout outside the launch dir is not on their path
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -31,6 +29,19 @@ def configure_env(root: str, work: str) -> None:
     os.environ["SPARK_GRAFT_EXTRA_CONF"] = (
         f"spark.driver.extraJavaOptions=-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     )
+
+
+def use_fixture(name: str) -> str:
+    """Returns the engine's fixture directory `name` (e.g. "sf0.1"), a
+    sibling of the catalog's default scale directory (which
+    SPARK_GRAFT_SF_DIR overrides), and makes it the session's data dir,
+    which the session sizes shuffles from. Must run before `start`. The
+    fixtures are read, never written."""
+    from sqldataintegrationfunctiontriggerapp_spark.catalog import DEFAULT_SF_DIR
+
+    path = os.path.join(os.path.dirname(os.path.abspath(DEFAULT_SF_DIR)), name)
+    os.environ["SPARK_GRAFT_SF_DIR"] = path
+    return path
 
 
 def start(app_name: str = "perfbench"):

@@ -2,12 +2,16 @@
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
-Run from the root of a checkout. Inputs are generated from --seed inside
-the checkout (under .perfbench_work/, removed at exit); the engine runs on
-local[4]. A traced run writes its spans to .perfbench_spans/. Human-readable lines go to stdout first; the last stdout line is
-one JSON object {"correct", "attempted", "failed", "metrics"} holding the
-end-to-end metrics (--trace 0) or the per-layer metrics (--trace 1).
-Exits non-zero without a result when the engine package is not present.
+Run from the root of a checkout. The workloads read the engine's own
+fixtures (lineitem and events at sf0.1, the analytics tables at sf0.01);
+--seed drives the storm workload's fault schedule. Change files, state and
+checkpoints go under .perfbench_work/ in the checkout and are removed at
+exit; the engine runs on local[4]. A traced run writes its spans to
+.perfbench_spans/. Human-readable lines go to stdout first; the last stdout
+line is one JSON object {"correct", "attempted", "failed", "metrics"}
+holding the end-to-end metrics (--trace 0) or the per-layer metrics
+(--trace 1). Exits non-zero without a result when the engine package or
+its fixtures are not present.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "sqldataintegrationfunctiontriggerapp_spark"
-WORKLOADS = ("cdc_stream", "cdc_bulk", "cdc_storm", "analytics_mix")
+WORKLOADS = ("cdc_stream", "cdc_storm", "analytics_mix")
 
 END_TO_END = {
     "setup_s": "s",
@@ -89,9 +93,6 @@ def parse(argv):
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--probe", action="store_true",
-                    help="also run bench.py's host calibration probe before and after "
-                         "the workload (about 25 s) and print the pair")
     return ap.parse_args(argv)
 
 
@@ -133,6 +134,9 @@ def run(args, work: str):
     from perfbench import engine
 
     engine.configure_env(ROOT, work)
+    data = engine.use_fixture("sf0.01" if args.workload == "analytics_mix" else "sf0.1")
+    if not os.path.isdir(data):
+        raise SystemExit(f"engine fixtures not found at {data}")
     from perfbench import workloads as W
     from perfbench.spans import Tracer
     from perfbench.stats import summarize
@@ -141,18 +145,9 @@ def run(args, work: str):
     try:
         tracer = Tracer(f"{args.workload}-{args.seed}", spark, enabled=bool(args.trace))
         clock = SetupClock()
-        probe = None
-        if args.probe:
-            probe = [_probe(spark)]
-        if args.workload == "cdc_stream":
-            res = W.run_stream(spark, work, args.seed, args.seconds, tracer, clock)
-        elif args.workload == "analytics_mix":
-            res = W.run_analytics(spark, work, args.seed, args.seconds, tracer, clock)
-        else:
-            res = W.run_bulk(spark, work, args.seed, args.seconds, tracer,
-                             args.workload == "cdc_storm", clock)
-        if args.probe:
-            probe.append(_probe(spark))
+        run_workload = {"cdc_stream": W.run_stream, "cdc_storm": W.run_storm,
+                        "analytics_mix": W.run_analytics}[args.workload]
+        res = run_workload(spark, work, data, args.seed, args.seconds, tracer, clock)
         if args.trace:
             spans_dir = os.path.join(ROOT, ".perfbench_spans")
             os.makedirs(spans_dir, exist_ok=True)
@@ -190,8 +185,6 @@ def run(args, work: str):
     for o in res.ops:
         if not o.ok:
             lines.append(f"FAILED {o.name}: {o.why}")
-    if probe:
-        lines.append(f"host.calibration_probe_s pre={probe[0]:.3f} post={probe[1]:.3f}")
     correct = failed == 0 and attempted > 0
     lines.append(f"correct={correct}")
     if args.trace:
@@ -206,13 +199,6 @@ def run(args, work: str):
         metrics = {k: {"value": float(v), "unit": END_TO_END[k]} for k, v in e2e.items()}
     return lines, {"correct": correct, "attempted": attempted, "failed": failed,
                    "metrics": metrics}
-
-
-def _probe(spark) -> float:
-    """The repository bench's fixed host-speed probe, as host context."""
-    import bench
-
-    return bench._calibration_probe(spark)
 
 
 if __name__ == "__main__":

@@ -122,13 +122,18 @@ def union_length(intervals) -> float:
     return total
 
 
-def reconcile(wall: float, spans: list[Span]) -> float:
-    """Relative difference between a wall the harness measured around an
-    operation and the union of the top-level spans inside it; 0 means the
-    traced layers account for the whole wall, and a call left out of the
-    trace shows up as the difference."""
-    top = [(s.start, s.end) for s in spans if s.parent is None]
-    return abs(wall - union_length(top)) / wall
+def child_intervals(spans: list[Span], parent: Span) -> list[tuple[float, float]]:
+    """The (start, end) of `parent`'s direct children, clipped to it."""
+    return [(max(c.start, parent.start), min(c.end, parent.end))
+            for c in spans if c.parent == parent.id]
+
+
+def reconcile(wall: float, intervals) -> float:
+    """Relative difference between a wall and the union of the intervals
+    measured inside it (a span's children, or the Spark jobs it ran); 0
+    means the next layer down accounts for the whole wall, and work left
+    out of that layer shows up as the difference."""
+    return abs(wall - union_length(intervals)) / wall
 
 
 class TracedState:
@@ -140,6 +145,12 @@ class TracedState:
         self._tracer = tracer
         self.get_calls = 0
         self.upsert_calls = 0
+        self.last_error_calls = 0
+        # the engine's own methods (save_last_error, ...) write through the
+        # store's `upsert`; point it at this wrapper so those writes are
+        # spanned and counted too
+        self._upsert = inner.upsert
+        inner.upsert = self.upsert
 
     def get_allowed_columns(self, table):
         self.get_calls += 1
@@ -149,14 +160,12 @@ class TracedState:
     def upsert(self, entity_type, key, value):
         self.upsert_calls += 1
         with self._tracer.span("state.upsert", job_group=True):
-            return self._inner.upsert(entity_type, key, value)
+            return self._upsert(entity_type, key, value)
 
     def save_last_error(self, table, message):
-        # the engine's save_last_error calls self.upsert on the inner store,
-        # so route it through this wrapper's upsert to keep it visible
-        from sqldataintegrationfunctiontriggerapp_spark.state import LAST_ERROR
-
-        self.upsert(LAST_ERROR, table, message)
+        self.last_error_calls += 1
+        with self._tracer.span("state.save_last_error"):
+            return self._inner.save_last_error(table, message)
 
     def __getattr__(self, name):
         return getattr(self._inner, name)

@@ -15,9 +15,10 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 
 from perfbench.receiver import BackoffRecorder, FaultSchedule, Receiver  # noqa: E402
-from perfbench.spans import Span, Tracer, reconcile, self_times, union_length  # noqa: E402
+from perfbench.spans import (  # noqa: E402
+    Span, Tracer, TracedState, child_intervals, reconcile, self_times, union_length,
+)
 from perfbench.stats import percentile, summarize, tail_percentile  # noqa: E402
-from perfbench import datagen  # noqa: E402
 
 
 # -- tail percentile rule -----------------------------------------------------
@@ -163,22 +164,50 @@ def test_tracer_records_parents_and_disabled_tracer_records_nothing():
     assert t.wrap("f", lambda x: x + 1)(1) == 2 and len(t.named("f")) == 1
 
 
-def test_reconcile_within_ten_percent_when_spans_cover_the_wall():
-    spans = [_span(1, 0.0, 4.0), _span(2, 4.2, 9.5), _span(3, 1.0, 2.0, parent=1)]
-    # wall 10 s; the top-level spans cover 9.3 s of it (children add nothing)
-    assert reconcile(10.0, spans) == pytest.approx(0.07)
-    assert reconcile(10.0, spans) <= 0.10
+def test_reconcile_a_span_against_its_direct_children():
+    batch = _span(1, 0.0, 10.0)
+    spans = [
+        batch,
+        _span(2, 0.0, 4.0, parent=1),    # project
+        _span(3, 1.0, 2.0, parent=2),    # its state lookup: a grandchild
+        _span(4, 4.2, 9.5, parent=1),    # post
+        _span(5, 9.4, 12.0),             # a later batch: not a child
+    ]
+    kids = child_intervals(spans, batch)
+    assert sorted(kids) == [(0.0, 4.0), (4.2, 9.5)]
+    # the children cover 9.3 s of the 10 s batch
+    assert reconcile(batch.duration, kids) == pytest.approx(0.07)
+    assert reconcile(batch.duration, kids) <= 0.10
     # a layer left out of the trace shows as a reconciliation error
-    assert reconcile(10.0, spans[1:]) > 0.10
+    assert reconcile(batch.duration, kids[1:]) > 0.10
+    # children running past their parent are clipped to it
+    assert child_intervals([batch, _span(6, 9.0, 11.0, parent=1)], batch) == [(9.0, 10.0)]
 
 
-# -- inputs ---------------------------------------------------------------------
-def test_inputs_repeat_for_a_seed_and_change_with_it(tmp_path):
-    a = datagen.write_fixture(str(tmp_path / "a"), 3, 0.001, ("lineitem", "events"))
-    b = datagen.write_fixture(str(tmp_path / "b"), 3, 0.001, ("lineitem", "events"))
-    c = datagen.write_fixture(str(tmp_path / "c"), 4, 0.001, ("lineitem", "events"))
-    assert a["lineitem"].equals(b["lineitem"]) and a["events"].equals(b["events"])
-    assert not a["lineitem"].equals(c["lineitem"])
-    li = a["lineitem"].to_pydict()
-    ids = [k * 8 + n for k, n in zip(li["l_orderkey"], li["l_linenumber"])]
-    assert len(set(ids)) == len(ids)  # the receiver's row id is a key
+class _Store:
+    """The shape of the engine's StateStore: save_last_error writes through
+    the instance's own upsert."""
+
+    def __init__(self):
+        self.rows = []
+
+    def upsert(self, entity_type, key, value):
+        self.rows.append((entity_type, key, value))
+
+    def save_last_error(self, table, message):
+        self.upsert("LastError", table, message)
+
+    def get_allowed_columns(self, table):
+        return "a,b"
+
+
+def test_traced_state_runs_the_stores_own_last_error_path():
+    store, t = _Store(), Tracer("r")
+    state = TracedState(store, t)
+    state.save_last_error("dbo.t", "boom")
+    assert store.rows == [("LastError", "dbo.t", "boom")]
+    assert state.last_error_calls == 1 and state.upsert_calls == 1
+    outer, = t.named("state.save_last_error")
+    inner, = t.named("state.upsert")
+    assert inner.parent == outer.id
+    assert state.get_allowed_columns("dbo.t") == "a,b" and state.get_calls == 1

@@ -1,14 +1,14 @@
-"""The four benchmark workloads.
+"""The three benchmark workloads, all on the engine's own fixtures.
 
-- cdc_stream: open loop. A generator thread publishes change files into a
-  file source on a fixed schedule; `ChangePipeline.foreach_batch` delivers
-  them to a healthy receiver. Per-batch fixed costs dominate.
-- cdc_bulk: closed loop. Shipdate slices of `lineitem` go through
-  `ChangePipeline.process_batch` one after another. Per-row work dominates.
-- cdc_storm: cdc_bulk's input against a receiver that refuses POSTs on a
-  seeded schedule, including one chunk per batch that exhausts the sink's
-  retry budget, so every batch is redelivered once.
-- analytics_mix: eight registry entries through the noop sink.
+- cdc_stream: open loop. A generator thread publishes change files cut from
+  `events` (sf0.1) into a file source on a fixed schedule;
+  `ChangePipeline.foreach_batch` delivers them to a healthy receiver.
+  Per-batch fixed costs dominate.
+- cdc_storm: closed loop. Shipdate slices of `lineitem` (sf0.1) go through
+  `ChangePipeline.process_batch` one after another, against a receiver that
+  refuses POSTs on a seeded schedule, including one chunk per batch that
+  exhausts the sink's retry budget, so every batch is redelivered once.
+- analytics_mix: eight registry entries through the noop sink (sf0.01).
 
 Each workload returns a `Result` holding its operations (with latency and
 verdict), the end-to-end numbers and, when traced, the per-layer numbers.
@@ -22,24 +22,24 @@ import math
 import os
 import threading
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow.parquet as pq
 
-from perfbench import datagen, sparkstats
+from perfbench import sparkstats
 from perfbench.receiver import BackoffRecorder, FaultSchedule, Receiver
-from perfbench.spans import Tracer, TracedSink, TracedState, reconcile, self_times, union_length
+from perfbench.spans import (
+    Tracer, TracedSink, TracedState, child_intervals, reconcile, self_times, union_length,
+)
 from perfbench.stats import median, percentile
 
-LINEITEM_SCALE = 0.1       # 600k rows x 11 columns
 DAY_US = 86_400_000_000
-BULK_BATCHES = 6
-BULK_WARMUP_BATCHES = 2
+STORM_BATCHES = 12         # lineitem's 600k rows x 11 columns in shipdate slices of 50k
+STORM_WARMUP_BATCHES = 2
 LINEITEM_CONFIG_ALLOW = "l_orderkey,l_linenumber,l_quantity,l_extendedprice,l_shipdate"
 LINEITEM_CLIENT_ALLOW = "L_ORDERKEY"  # already in the config list, other case
-EVENTS_SCALE = 0.1         # 100k rows
-STREAM_FILES = 50
+STREAM_FILES = 50          # events' 100k rows in files of 2k
 STREAM_PERIOD_S = 1.2      # about half the closed-loop drain rate at 4 cores
 STREAM_WARMUP_FILES = 4
 EVENTS_CONFIG_ALLOW = "event_id,user_id,event_type,value"
@@ -47,7 +47,6 @@ EVENTS_CLIENT_ALLOW = "EVENT_TYPE"
 STORM_FAIL_SHARE = 0.3
 STORM_MAX_ATTEMPTS = 3
 REDELIVERY_BUDGET = 4      # deliveries of one batch before it counts as failed
-ANALYTICS_SCALE = 0.01
 ANALYTICS_QUERIES = (
     "q1_pricing_summary",
     "q7_nation_volume_shipping",
@@ -86,8 +85,9 @@ class Result:
         return sum(not o.ok for o in self.ops)
 
 
-def lineitem_row_id(item: dict) -> int:
-    return item["l_orderkey"] * 8 + item["l_linenumber"]
+def lineitem_row_id(item: dict) -> tuple:
+    # (orderkey, linenumber) repeats in the fixture; with the price it is a key
+    return (item["l_orderkey"], item["l_linenumber"], item["l_extendedprice"])
 
 
 def event_row_id(item: dict) -> int:
@@ -95,7 +95,7 @@ def event_row_id(item: dict) -> int:
 
 
 # --------------------------------------------------------------------------
-# CDC plumbing shared by the three delivery workloads
+# CDC plumbing shared by the two delivery workloads
 # --------------------------------------------------------------------------
 class CdcRig:
     """Receiver, state store, sink and pipeline for one table; the state
@@ -226,24 +226,34 @@ def overhead_share(ops, by_name: bool = True) -> float:
     return (on - off) / off if off else 0.0
 
 
+def batch_reconcile(tracer: Tracer) -> float:
+    """The largest share of a traced `process_batch` call that its direct
+    children (projection, envelope, post, LastError write) leave unexplained."""
+    return max((reconcile(s.duration, child_intervals(tracer.spans, s))
+                for s in tracer.named("pipeline.process_batch")), default=0.0)
+
+
 # --------------------------------------------------------------------------
-# cdc_bulk / cdc_storm: closed loop over shipdate slices of lineitem
+# cdc_storm: closed loop over shipdate slices of lineitem, faulty receiver
 # --------------------------------------------------------------------------
-def prepare_lineitem(work: str, seed: int):
-    data = os.path.join(work, "data")
-    t = datagen.write_fixture(data, seed, LINEITEM_SCALE, ("lineitem",))["lineitem"]
+def prepare_lineitem(data: str):
+    """Shipdate slices of the fixture's lineitem: (lo_us, hi_us, row ids,
+    the row id in the middle of the slice in file order)."""
+    t = pq.read_table(os.path.join(data, "lineitem.parquet"),
+                      columns=["l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate"])
     ship = t.column("l_shipdate").cast("int64").to_numpy()
-    ids = (t.column("l_orderkey").to_numpy() * 8 + t.column("l_linenumber").to_numpy())
+    ids = list(zip(t.column("l_orderkey").to_pylist(), t.column("l_linenumber").to_pylist(),
+                   t.column("l_extendedprice").to_pylist()))
     # shipdates are whole days; day-aligned edges let a batch's watermarks
     # move by up to a day minus 1 us without changing which rows it holds
-    edges = np.quantile(ship, np.linspace(0, 1, BULK_BATCHES + 1)) // DAY_US * DAY_US
+    edges = np.quantile(ship, np.linspace(0, 1, STORM_BATCHES + 1)) // DAY_US * DAY_US
     edges[0] = ship.min() - DAY_US
     edges[-1] = ship.max()
     slices = []
     for lo, hi in zip(edges[:-1], edges[1:]):
-        mask = (ship > lo) & (ship <= hi)
-        slices.append((int(lo), int(hi), set(ids[mask].tolist())))
-    return data, slices
+        rows = np.flatnonzero((ship > lo) & (ship <= hi))
+        slices.append((int(lo), int(hi), {ids[r] for r in rows}, ids[rows[len(rows) // 2]]))
+    return slices
 
 
 def _us_to_dt(us: int):
@@ -252,8 +262,8 @@ def _us_to_dt(us: int):
     return datetime(1970, 1, 1) + timedelta(microseconds=us)
 
 
-def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
-             storm: bool, setup_clock) -> Result:
+def run_storm(spark, work: str, data: str, seed: int, seconds: float, tracer: Tracer,
+              setup_clock) -> Result:
     from pyspark.sql import functions as F
 
     from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
@@ -263,19 +273,16 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
     )
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import batch_changes
 
-    data, slices = prepare_lineitem(work, seed)
-    schedule = None
-    if storm:
-        # the median row id of each batch, which the seeded data places
-        # mid-batch: its chunk exhausts the retry budget after about half
-        # the batch was acknowledged, so redelivery duplicates that half
-        doomed = frozenset(sorted(ids)[len(ids) // 2] for _, _, ids in slices)
-        schedule = FaultSchedule(seed, STORM_FAIL_SHARE, STORM_MAX_ATTEMPTS, doomed)
+    slices = prepare_lineitem(data)
+    # the chunk holding each batch's middle row (one scan task delivers the
+    # batch in file order) exhausts the retry budget after about half the
+    # batch was acknowledged, so redelivery duplicates that half
+    doomed = frozenset(mid for _, _, _, mid in slices)
+    schedule = FaultSchedule(seed, STORM_FAIL_SHARE, STORM_MAX_ATTEMPTS, doomed)
     setup_clock.start()
     trace_mode = tracer.enabled
     rig = CdcRig(spark, work, "lineitem", LINEITEM_CONFIG_ALLOW, LINEITEM_CLIENT_ALLOW,
-                 lineitem_row_id, tracer, schedule,
-                 max_attempts=STORM_MAX_ATTEMPTS if storm else 5)
+                 lineitem_row_id, tracer, schedule, max_attempts=STORM_MAX_ATTEMPTS)
     try:
         rig.warm_receiver()
         src = load_table(spark, data, "lineitem")
@@ -284,7 +291,7 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
             batches, every batch carries watermarks no earlier batch used
             (shifted by i microseconds), so plans cached for one batch are
             not reused by the next."""
-            lo, hi, _ = slices[k]
+            lo, hi = slices[k][:2]
             return batch_changes(
                 src.where(F.col("l_shipdate") <= F.lit(_us_to_dt(hi + i))),
                 "l_shipdate", _us_to_dt(lo + i))
@@ -292,23 +299,22 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
             """One batch, redelivered as Structured Streaming would until it
             is acknowledged or the redelivery budget is spent."""
             ledger = rig.receiver.begin_op()
-            posts0, upserts0 = rig.receiver.counts.posts, rig.state.upsert_calls
+            posts0, errors0 = rig.receiver.counts.posts, rig.state.last_error_calls
             batch = frame(k, i)
             t0 = time.perf_counter()
             deliveries = 0
-            with tracer.span("cdc.batch"):
-                ok, why = False, "undelivered within the redelivery budget"
-                while deliveries < REDELIVERY_BUDGET:
-                    deliveries += 1
-                    try:
-                        rig.pipe.process_batch(batch, "lineitem")
-                        ok, why = True, ""
-                        break
-                    except RetryableSinkError:
-                        continue
-                    except FatalSinkError as e:
-                        why = f"fatal sink error: {e}"[:200]
-                        break
+            ok, why = False, "undelivered within the redelivery budget"
+            while deliveries < REDELIVERY_BUDGET:
+                deliveries += 1
+                try:
+                    rig.pipe.process_batch(batch, "lineitem")
+                    ok, why = True, ""
+                    break
+                except RetryableSinkError:
+                    continue
+                except FatalSinkError as e:
+                    why = f"fatal sink error: {e}"[:200]
+                    break
             dt = time.perf_counter() - t0
             rig.receiver.end_op()
             expected = slices[k][2]
@@ -317,19 +323,19 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
             return Op(name, dt, len(expected), ok, why, tracer.enabled, {
                 "posts": rig.receiver.counts.posts - posts0,
                 "redeliveries": deliveries - 1,
-                "last_error_writes": rig.state.upsert_calls - upserts0,
+                "last_error_writes": rig.state.last_error_calls - errors0,
                 "duplicates": ledger.accepted_rows - len(ledger.ids),
                 "distinct": len(ledger.ids),
             })
 
         # warm-up: the first batches through every layer, receiver included,
         # until the per-batch path has left its JIT-cold phase
-        for i in range(BULK_WARMUP_BATCHES):
+        for i in range(STORM_WARMUP_BATCHES):
             deliver(i % len(slices), i, "warmup")
         setup_clock.stop()
         tracer.spans.clear()
         rig.receiver.counts.__init__()
-        rig.state.get_calls = rig.state.upsert_calls = 0
+        rig.state.get_calls = rig.state.upsert_calls = rig.state.last_error_calls = 0
         if rig.recorder.requested():
             os.remove(rig.recorder.path)
         first_job = sparkstats.last_job_id(spark)
@@ -337,7 +343,7 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         t_start = time.perf_counter()
         # closed loop over the slices, until the window has passed; each
         # batch's counts depend only on the seed and the slice
-        for i in itertools.count(BULK_WARMUP_BATCHES):
+        for i in itertools.count(STORM_WARMUP_BATCHES):
             k = i % len(slices)
             if trace_mode:
                 tracer.enabled = i % 2 == 0
@@ -350,7 +356,6 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         res.rows_per_s = (sum(o.rows for o in res.ops if o.ok)
                           / sum(o.latency_s for o in res.ops))
         total = {key: sum(o.counts[key] for o in res.ops) for key in res.ops[0].counts}
-        redeliveries = total["redeliveries"]
         dup_share = total["duplicates"] / max(total["distinct"], 1)
         res.info.update({
             "batches": len(res.ops),
@@ -366,7 +371,6 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         if trace_mode:
             jobs = sparkstats.job_ids_after(spark, first_job)
             sl, js = spark_layers(spark, jobs, wall)
-            traced_spans = [s for s in tracer.spans if s.name == "cdc.batch"]
             res.layers.update(sl)
             res.layers.update(span_layers(tracer, rig.state))
             res.layers.update(sink_layers(rig))
@@ -374,42 +378,24 @@ def run_bulk(spark, work: str, seed: int, seconds: float, tracer: Tracer,
                 "changefeed.scan_rows_per_row_out": js.input_records / max(c.accepted_rows, 1),
                 "projection.cols_kept_share": len(rig.allow) / 11.0,
                 "pipeline.batches": len(res.ops),
-                "retry.batch_redeliveries": redeliveries,
+                "retry.batch_redeliveries": total["redeliveries"],
                 "retry.last_error_writes": total["last_error_writes"],
                 "retry.duplicate_share": dup_share,
                 "trace.overhead_share": overhead_share(res.ops, by_name=False),
-                # per traced batch, and for the window: the harness's own
-                # checks between batches are the only time outside them
-                "trace.reconcile_share": max(
-                    [reconcile(o.latency_s, _subtree(tracer, s))
-                     for o, s in zip([o for o in res.ops if o.traced], traced_spans)]
-                    + [abs(wall - sum(o.latency_s for o in res.ops)) / wall]),
+                "trace.reconcile_share": batch_reconcile(tracer),
             })
         return res
     finally:
         rig.close()
 
-
-def _subtree(tracer: Tracer, root):
-    """The spans under `root`, re-rooted so `root`'s children are top level."""
-    kids = {root.id}
-    out = []
-    for s in sorted(tracer.spans, key=lambda s: s.start):
-        if s.parent in kids:
-            kids.add(s.id)
-            out.append(s)
-    return [replace(s, parent=None) if s.parent == root.id else s for s in out]
-
-
 # --------------------------------------------------------------------------
 # cdc_stream: open loop through the file source and foreach_batch
 # --------------------------------------------------------------------------
-def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
+def run_stream(spark, work: str, data: str, seed: int, seconds: float, tracer: Tracer,
                setup_clock) -> Result:
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import stream_changes
 
-    events = datagen.write_fixture(os.path.join(work, "data"), seed, EVENTS_SCALE,
-                                   ("events",))["events"]
+    events = pq.read_table(os.path.join(data, "events.parquet"))
     staging = os.path.join(work, "staging")
     src = os.path.join(work, "stream_src")
     os.makedirs(staging)
@@ -477,6 +463,9 @@ def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
             publish(k)
             if not wait_acked([k], 30):
                 raise RuntimeError(f"warm-up file {k} was not delivered")
+        # rows are acknowledged inside process_batch; let the last warm-up
+        # batch return and commit before the counters are reset
+        query.processAllAvailable()
         setup_clock.stop()
         tracer.spans.clear()
         first_job = sparkstats.last_job_id(spark)
@@ -508,9 +497,10 @@ def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         gen.join(timeout=seconds + 30)
         published = sorted(due)
         drained = wait_acked(published, 30)
+        if drained:
+            query.processAllAvailable()  # the last batch's process_batch returns
         wall = time.time() - t0
         res = Result()
-        last_ack = t0
         for k in published:
             ids = files[k][1]
             got = [recv.ack_times.get(int(i)) for i in ids]
@@ -518,16 +508,16 @@ def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
                 res.ops.append(Op(f"file{k}", float("nan"), len(ids), False,
                                   f"{sum(g is None for g in got)} rows missing"))
                 continue
-            last = max(got)
-            last_ack = max(last_ack, last)
-            res.ops.append(Op(f"file{k}", last - due[k], len(ids)))
+            res.ops.append(Op(f"file{k}", max(got) - due[k], len(ids)))
         if recv.counts.bad_keys:
             for o in res.ops:
                 o.ok, o.why = False, "item keys outside allowlist"
         if not drained and query.exception() is not None:
             res.info["stream_error"] = str(query.exception())[:300]
-        ok_ops = [o for o in res.ops if o.ok]
-        res.rows_per_s = sum(o.rows for o in ok_ops) / max(last_ack - t0, 1e-9)
+        # the pipeline's own time: delivered rows over the summed wall of
+        # the process_batch calls that delivered them
+        batch_wall = sum(dt for dt, _ in timed_batches)
+        res.rows_per_s = sum(o.rows for o in res.ops if o.ok) / max(batch_wall, 1e-9)
         res.info.update({
             "files": len(published),
             "period_s": STREAM_PERIOD_S,
@@ -560,7 +550,7 @@ def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
                 "pipeline.batches": len(progress),
                 "projection.cols_kept_share": len(rig.allow) / 6.0,
                 "trace.overhead_share": overhead_share(batch_ops),
-                "trace.reconcile_share": _stream_reconcile(progress),
+                "trace.reconcile_share": batch_reconcile(tracer),
             })
         return res
     finally:
@@ -568,19 +558,6 @@ def run_stream(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         if query is not None:
             query.stop()
         rig.close()
-
-
-def _stream_reconcile(progress) -> float:
-    """How far the trigger's named phases fall short of its total:
-    |triggerExecution - sum(phases)| / triggerExecution over all batches."""
-    total = parts = 0.0
-    for p in progress:
-        d = p.durationMs
-        total += d.get("triggerExecution", 0)
-        parts += sum(d.get(k, 0) for k in (
-            "latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit",
-            "commitOffsets"))
-    return abs(total - parts) / total if total else 0.0
 
 
 # --------------------------------------------------------------------------
@@ -625,13 +602,11 @@ def oracle_hashes(data: str, names) -> dict:
         con.close()
 
 
-def run_analytics(spark, work: str, seed: int, seconds: float, tracer: Tracer,
+def run_analytics(spark, work: str, data: str, seed: int, seconds: float, tracer: Tracer,
                   setup_clock) -> Result:
     from sqldataintegrationfunctiontriggerapp_spark.plans import QUERIES
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import stage_ledger_tick
 
-    data = os.path.join(work, "data")
-    datagen.write_fixture(data, seed, ANALYTICS_SCALE)
     setup_clock.start()
     trace_mode = tracer.enabled
     # warm-up pass doubles as the output check: collect and hash each result
@@ -660,11 +635,10 @@ def run_analytics(spark, work: str, seed: int, seconds: float, tracer: Tracer,
             t0 = time.perf_counter()
             ok, why = name not in errors, errors.get(name, "")
             try:
-                with tracer.span(f"plans.{name}"):
-                    with tracer.span(f"plans.{name}.build"):
-                        df = QUERIES[name](spark, data)
-                    with tracer.span(f"plans.{name}.exec", job_group=True):
-                        df.write.mode("overwrite").format("noop").save()
+                with tracer.span(f"plans.{name}.build"):
+                    df = QUERIES[name](spark, data)
+                with tracer.span(f"plans.{name}.exec", job_group=True):
+                    df.write.mode("overwrite").format("noop").save()
             except Exception as e:
                 ok, why = False, f"{type(e).__name__}: {e}"[:200]
             dt = time.perf_counter() - t0
@@ -698,16 +672,16 @@ def run_analytics(spark, work: str, seed: int, seconds: float, tracer: Tracer,
         res.layers.update(sl)
         worst = 0.0
         for name in ANALYTICS_QUERIES:
-            root = tracer.named(f"plans.{name}")
             build = tracer.named(f"plans.{name}.build")
             ex = tracer.named(f"plans.{name}.exec")
-            walls = [o.latency_s for o in res.ops if o.name == name and o.traced]
             cpu_ms = gap_ms = 0.0
             for s in ex:
                 qjs = sparkstats.collect(spark, sparkstats.job_ids_for_group(spark, s.job_group))
                 clipped = [(max(a, s.start), min(b, s.end)) for a, b in qjs.intervals]
                 gap_ms += (s.duration - union_length(clipped)) * 1e3
                 cpu_ms += qjs.cpu_ms
+                # the noop write against the Spark jobs tagged with its group
+                worst = max(worst, reconcile(s.duration, clipped))
             n = max(len(ex), 1)
             res.layers.update({
                 f"plans.{name}.build_ms": median([s.duration for s in build]) * 1e3 if build else 0.0,
@@ -715,9 +689,6 @@ def run_analytics(spark, work: str, seed: int, seconds: float, tracer: Tracer,
                 f"plans.{name}.driver_gap_ms": gap_ms / n,
                 f"plans.{name}.executor_cpu_ms": cpu_ms / n,
             })
-            for w, r in zip(walls, root):
-                worst = max(worst, reconcile(w, _subtree(tracer, r)))
         res.layers["trace.overhead_share"] = overhead_share(res.ops)
-        res.layers["trace.reconcile_share"] = max(
-            worst, abs(wall - sum(o.latency_s for o in res.ops)) / wall)
+        res.layers["trace.reconcile_share"] = worst
     return res
