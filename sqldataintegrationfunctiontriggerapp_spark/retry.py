@@ -74,11 +74,16 @@ class RetryController:
     sleeper: object = time.sleep
     clock: object = field(default=lambda: datetime.now(timezone.utc))
     retry_count: int = 0
+    # when the orchestration began; set by the first step (or by
+    # run_retry_loop) and measured against total_retry_timeout_hours
+    start: datetime | None = field(default=None, init=False)
 
     def step(self, now: datetime) -> bool:
         """One orchestration turn (RetryFunctions.cs:19-68). Returns True to
         continue (ContinueAsNew), False when done."""
-        if timed_out(getattr(self, "start", now), self.settings.total_retry_timeout_hours, now):
+        if self.start is None:
+            self.start = now
+        if timed_out(self.start, self.settings.total_retry_timeout_hours, now):
             return False  # :129-132
         count = self.probe_attempt_count()  # :141-143 (A16)
         if count is None or count < 1:

@@ -6,7 +6,8 @@ Behavioral parity:
   HttpPostAction.cs:36 / A6
 - POST to base_url + route with a timeout (960 s in the reference, :39)
 - classify the response: 2xx success; 408/429/5xx retryable; other fatal
-  (:74-83 / A8)
+  (:74-83 / A8); a refused, reset or timed-out connection is retryable too
+  (an HttpRequestException without the retry=false tag)
 - truncate response bodies to 500 chars for diagnostics (:60-63 / A9)
 - on failure record LastError (A10) and re-raise so the caller's checkpoint
   does not advance (A25, ExecuteTriggerHelper.cs:156-157)
@@ -14,8 +15,8 @@ Behavioral parity:
 
 Scale: rows are serialized executor-side (to_json is JVM columnar work);
 posting happens per partition via foreachPartition-style iteration so a
-1000-executor job opens 1000 connections, not one driver bottleneck. For
-local tests `post_batch` collects -- the partition path is `post_partitions`.
+1000-executor job opens 1000 connections, not one driver bottleneck
+(`post_partitions`).
 """
 
 from __future__ import annotations
@@ -98,11 +99,14 @@ class HttpSink:
         body = ("[" + ",".join(payloads) + "]").encode()
         attempt = 0
         while True:
-            status, resp_body = _post_once(self.url(), body, self.timeout_seconds)
-            kind = classify_status(status)
+            try:
+                status, resp_body = _post_once(self.url(), body, self.timeout_seconds)
+                kind = classify_status(status)
+                err = f"status={status} body={truncate_error(resp_body)}"
+            except OSError as e:  # refused / reset / timed out (URLError too)
+                kind, err = "retryable", f"transport error: {e!r}"
             if kind == "success":
                 return
-            err = f"status={status} body={truncate_error(resp_body)}"
             if kind == "fatal":
                 raise FatalSinkError(err)
             attempt += 1
@@ -113,13 +117,6 @@ class HttpSink:
                 self.max_backoff_seconds,
             )
             self.sleeper(backoff)
-
-    def post_batch(self, enveloped: DataFrame) -> int:
-        """Driver-side batch POST (small batches / tests). Returns row count."""
-        payloads = [r["payload"] for r in enveloped.collect()]
-        if payloads:
-            self.post_payloads(payloads)
-        return len(payloads)
 
     def post_partitions(self, enveloped: DataFrame, chunk_rows: int = 500) -> int:
         """Executor-side POST: each partition posts its own chunked batches

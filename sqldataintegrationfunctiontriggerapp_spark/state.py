@@ -1,31 +1,37 @@
-"""Keyed state table -- the engine's replacement for durable entities
+"""Keyed state store -- the engine's replacement for durable entities
 (EntityFunctions.cs) and orchestration instance registries.
 
-Schema: (entity_type, key, value, updated_at). The reference keeps two
-entity families keyed by table name -- LastError {message, date}
-(EntityFunctions.cs:8-27) and AllowedColumns {csv} (:32-47) -- plus
-singleton orchestration instances keyed by table (RetryFunctions.cs:92).
-All three map onto rows here.
+The reference keeps two entity families keyed by table name -- LastError
+{message, date} (EntityFunctions.cs:8-27) and AllowedColumns {csv}
+(:32-47). Each (entity_type, key) holds one small value.
 
-Storage: a parquet directory laid out as
-``entity_type=<t>/bucket=<md5(key) % N>/``; an upsert reads, merges, and
-overwrites ONLY the one (entity_type, bucket) partition its key hashes to,
-so concurrent upserts against different tables touch disjoint files and the
-write cost is O(keys-in-bucket), never O(state). Point lookups (`get`) read
-one partition directory. On a cluster this layout maps 1:1 onto a Delta
-table partitioned the same way with `MERGE INTO`; the API is shaped so that
-swap is one method body. The md5 bucket (not Spark's hash()) keeps the
-layout engine-portable and stable across versions.
+Storage: one JSON document per (entity_type, key) at
+``<path>/<quote(entity_type)>/<quote(key)>.json`` holding
+``{"value": ..., "updated_at": <UTC ISO-8601>}``. Neither reads nor writes
+run a Spark job; only `as_dataframe` builds a frame.
+
+Commit point: `upsert` writes the whole document to a temp file in the same
+directory, fsyncs it, and `os.replace`s it over the key's document. The
+rename is the commit: a reader sees the old document or the new one, never
+a torn or missing one, and a writer that dies before the rename leaves only
+a ``*.json.tmp.*`` file that readers ignore. Upserts to different keys
+write different files, so neither can lose the other's update.
+
+Reads: `get` opens one document. Only a missing document means "not
+configured" (None). One that exists but cannot be read or parsed raises, so
+a batch fails before any POST -- instead of treating the allowlist as absent
+and posting every column (A2) -- and its checkpoint does not advance.
 """
 
 from __future__ import annotations
 
-import hashlib
+import json
 import os
+import uuid
 from datetime import datetime, timezone
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 STATE_SCHEMA = T.StructType(
@@ -36,17 +42,6 @@ STATE_SCHEMA = T.StructType(
         T.StructField("updated_at", T.TimestampType(), False),
     ]
 )
-
-# data files inside a partition carry only the non-partition columns
-_PART_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("updated_at", T.TimestampType(), False),
-    ]
-)
-
-N_BUCKETS = 16
 
 
 def _local_df(
@@ -66,91 +61,49 @@ LAST_ERROR = "LastError"          # EntityFunctions.cs:8
 ALLOWED_COLUMNS = "AllowedColumns"  # EntityFunctions.cs:32
 
 
-def key_bucket(key: str, n_buckets: int = N_BUCKETS) -> int:
-    """Stable, engine-portable bucket id for a state key."""
-    return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % n_buckets
-
-
 class StateStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    def _partition_dir(self, entity_type: str, key: str) -> str:
+    def _doc_path(self, entity_type: str, key: str) -> str:
         return os.path.join(
-            self.path,
-            f"entity_type={entity_type}",
-            f"bucket={key_bucket(key)}",
-        )
-
-    def _read_partition(self, part_dir: str) -> DataFrame:
-        if not os.path.isdir(part_dir):
-            return _local_df(self.spark, [], _PART_SCHEMA)
-        return self.spark.read.schema(_PART_SCHEMA).parquet(part_dir)
-
-    def _read(self) -> DataFrame:
-        if not os.path.isdir(self.path) or not os.listdir(self.path):
-            return _local_df(self.spark, [], STATE_SCHEMA)
-        df = (
-            self.spark.read.schema(_PART_SCHEMA)
-            .option("basePath", self.path)
-            .parquet(self.path)
-        )
-        # partition-dir columns come back from directory names; normalize
-        # types/order to STATE_SCHEMA
-        return df.select(
-            F.col("entity_type").cast("string"),
-            "key",
-            "value",
-            "updated_at",
+            self.path, quote(entity_type, safe=""), quote(key, safe="") + ".json"
         )
 
     def upsert(self, entity_type: str, key: str, value: str | None) -> None:
-        """MERGE-style last-writer-wins upsert (EntityFunctions.cs Save ops),
-        rewriting only the (entity_type, bucket) partition the key lives in --
-        untouched keys' files are never rewritten (asserted in
-        tests/test_state_retry.py).
+        """Last-writer-wins upsert (EntityFunctions.cs Save ops): replaces
+        the key's document and touches no other file.
 
         Last-writer-wins is defined by CALL order, not by stored timestamps:
-        the incoming write replaces the key's row unconditionally, even if an
-        existing row carries a LATER updated_at (clock skew between writers).
+        the incoming write replaces the document unconditionally, even if the
+        stored one carries a LATER updated_at (clock skew between writers).
         That matches the reference's entity semantics -- a durable entity
         applies operations in arrival order, it never compares wall clocks
-        (EntityFunctions.cs:17-21) -- and it makes the merge deterministic
-        where a timestamp comparison would break ties by collect() order.
-        Pinned by tests/test_state_retry.py (clock-skew case)."""
+        (EntityFunctions.cs:17-21). Pinned by tests/test_state_retry.py."""
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        part_dir = self._partition_dir(entity_type, key)
-        # The partition is tiny BY CONSTRUCTION (one row per table in this
-        # bucket), so the last-writer-wins merge happens driver-side: one
-        # bounded collect + one single-file overwrite. The previous shape
-        # (unionByName + row_number window) planned a full shuffle --
-        # measured at ~5 s per upsert under spark.sql.shuffle.partitions=32
-        # for a ONE-ROW merge, which dominated the pipeline-parity run. At
-        # scale this method's contract is unchanged: cost is O(keys in this
-        # bucket), never O(state); a Delta deployment swaps the body for
-        # MERGE INTO on the same (entity_type, bucket) partition.
-        latest: dict[str, tuple] = {}
-        for r in sorted(
-            self._read_partition(part_dir).collect(),
-            key=lambda r: r["updated_at"],
-        ):
-            latest[r["key"]] = (r["value"], r["updated_at"])
-        latest[key] = (value, now)
-        rows = [(k, v, ts) for k, (v, ts) in latest.items()]
-        out = _local_df(self.spark, rows, _PART_SCHEMA)
-        out.write.mode("overwrite").parquet(part_dir)
+        doc = self._doc_path(entity_type, key)
+        os.makedirs(os.path.dirname(doc), exist_ok=True)
+        tmp = f"{doc}.tmp.{uuid.uuid4().hex}"
+        try:
+            with open(tmp, "w") as f:
+                json.dump({"value": value, "updated_at": now.isoformat()}, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, doc)  # THE commit point
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
 
     def get(self, entity_type: str, key: str) -> str | None:
-        """Keyed point lookup (ClientAllowedColumnsFunction.cs:47-56): reads
-        exactly one partition directory."""
-        rows = (
-            self._read_partition(self._partition_dir(entity_type, key))
-            .where(F.col("key") == key)
-            .select("value")
-            .collect()
-        )
-        return rows[0]["value"] if rows else None
+        """Keyed point lookup (ClientAllowedColumnsFunction.cs:47-56): opens
+        exactly one document; None only when it does not exist."""
+        try:
+            with open(self._doc_path(entity_type, key)) as f:
+                return json.load(f)["value"]
+        except FileNotFoundError:
+            return None
 
     def save_last_error(self, table: str, message: str) -> None:
         """A10: LastError upsert with UTC stamp (EntityFunctions.cs:17-21,
@@ -165,4 +118,20 @@ class StateStore:
         return self.get(ALLOWED_COLUMNS, table)
 
     def as_dataframe(self) -> DataFrame:
-        return self._read()
+        """Every committed document as one STATE_SCHEMA row."""
+        rows = []
+        entities = os.listdir(self.path) if os.path.isdir(self.path) else []
+        for entity in sorted(entities):
+            entity_dir = os.path.join(self.path, entity)
+            for name in sorted(os.listdir(entity_dir)):
+                if not name.endswith(".json"):
+                    continue  # a crashed writer's temp file
+                with open(os.path.join(entity_dir, name)) as f:
+                    d = json.load(f)
+                rows.append((
+                    unquote(entity),
+                    unquote(name[: -len(".json")]),
+                    d["value"],
+                    datetime.fromisoformat(d["updated_at"]),
+                ))
+        return _local_df(self.spark, rows, STATE_SCHEMA)

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import http.server
 import json
+import os
+import socket
 import threading
 
 import pytest
@@ -131,19 +133,12 @@ def test_retryable_backoff_then_raise(spark, sf_dir, pipeline):
     assert "status=503" in state.get("LastError", "events")
 
 
-def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline,
-                                                monkeypatch):
+def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline):
     """Deployment-path pin (VERDICT r11 #6): ChangePipeline.process_batch
-    must route through the executor-side post_partitions path -- never the
-    driver-collect post_batch -- and a multi-partition batch must arrive
-    as one POST per partition (no driver fan-in)."""
+    must route through the executor-side post_partitions path -- a
+    multi-partition batch arrives as one POST per partition (no driver
+    fan-in)."""
     pipe, handler, state = pipeline
-    monkeypatch.setattr(
-        HttpSink, "post_batch",
-        lambda self, df: (_ for _ in ()).throw(
-            AssertionError("driver-collect path used by process_batch")
-        ),
-    )
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import (
         with_operation,
     )
@@ -157,6 +152,99 @@ def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline,
     # POST per partition; a driver-side collect would have produced 1
     assert len(handler.received) == 4
     assert sum(len(req) for req in handler.received) == 40
+
+
+def _closed_port() -> int:
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        return s.getsockname()[1]
+
+
+def test_refused_connection_is_retryable_and_records_last_error(
+        spark, sf_dir, pipeline):
+    """A transport failure is retryable (A8: an HttpRequestException without
+    the retry=false tag): a closed receiver port must surface from the
+    executor-side POST as RetryableSinkError and leave a LastError, not
+    escape as a raw URLError / opaque task failure."""
+    pipe, handler, state = pipeline
+    pipe.sink = HttpSink(base_url=f"http://127.0.0.1:{_closed_port()}",
+                         max_attempts=2, sleeper=lambda s: None)
+    from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import with_operation
+
+    ev = load_table(spark, sf_dir, "events").limit(3)
+    with pytest.raises(RetryableSinkError, match="transport error"):
+        pipe.process_batch(with_operation(ev), "events")
+    assert "transport error" in state.get("LastError", "events")
+    assert pipe.last_outcome == {"table": "events", "ok": False, "retryable": True}
+
+
+@pytest.mark.parametrize("receiver", ["refused", "silent"])
+def test_transport_errors_back_off_then_raise_retryable(receiver):
+    """Refused and timed-out connections take the A15 backoff like a 503."""
+    with socket.socket() as silent:  # accepts (backlog) but never answers
+        silent.bind(("127.0.0.1", 0))
+        silent.listen(4)
+        port = _closed_port() if receiver == "refused" else silent.getsockname()[1]
+        sleeps: list[float] = []
+        sink = HttpSink(base_url=f"http://127.0.0.1:{port}", max_attempts=2,
+                        timeout_seconds=0.2, sleeper=sleeps.append)
+        with pytest.raises(RetryableSinkError, match="transport error"):
+            sink.post_payloads(["{}"])
+    assert sleeps == [10.0]
+
+
+def _events_pipeline_without_config_allowlist(pipeline):
+    """The fixture's pipeline with no config allowlist, so the client
+    allowlist in state is the only thing narrowing the posted columns."""
+    pipe, handler, state = pipeline
+    return ChangePipeline(EngineSettings(), state, pipe.sink), handler, state
+
+
+def test_failed_allowlist_upsert_never_widens_egress(spark, sf_dir, pipeline,
+                                                     monkeypatch):
+    """A state write that dies midway must leave the prior allowlist in
+    force: the next batch posts no column outside it. (A lost allowlist
+    would read as "none configured" and post every column, A2.)"""
+    from sqldataintegrationfunctiontriggerapp_spark import state as state_mod
+    from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import with_operation
+
+    pipe, handler, state = _events_pipeline_without_config_allowlist(pipeline)
+    state.save_allowed_columns("events", "event_id,value")
+
+    def torn_dump(obj, f):
+        f.write('{"value": "event_id,value,us')
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(state_mod.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        state.save_allowed_columns("events", "event_id,value,user_id")
+    monkeypatch.undo()
+    doc = state._doc_path("AllowedColumns", "events")
+    assert os.listdir(os.path.dirname(doc)) == ["events.json"]  # no temp left
+
+    ev = load_table(spark, sf_dir, "events").limit(5)
+    assert pipe.process_batch(with_operation(ev), "events") == 5
+    items = [doc["item"] for req in handler.received for doc in req]
+    assert len(items) == 5
+    assert all(set(item) == {"event_id", "value"} for item in items)
+
+
+def test_corrupt_allowlist_fails_batch_before_any_post(spark, sf_dir, pipeline):
+    """An allowlist document that exists but cannot be parsed fails the
+    batch before the sink is reached (the checkpoint does not advance);
+    it is never read as "no allowlist", which would post every column."""
+    from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import with_operation
+
+    pipe, handler, state = _events_pipeline_without_config_allowlist(pipeline)
+    state.save_allowed_columns("events", "event_id,value")
+    with open(state._doc_path("AllowedColumns", "events"), "w") as f:
+        f.write('{"value": "event_id,va')  # torn by something outside the store
+    ev = load_table(spark, sf_dir, "events").limit(5)
+    with pytest.raises(ValueError):
+        pipe.process_batch(with_operation(ev), "events")
+    assert handler.received == []
+    with pytest.raises(ValueError):
+        state.as_dataframe()
 
 
 def test_backoff_schedule_first_10s(http_server):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
+
 from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
 from sqldataintegrationfunctiontriggerapp_spark.maintenance import purge_history
 from sqldataintegrationfunctiontriggerapp_spark.retry import (
@@ -29,58 +31,81 @@ def test_state_upsert_and_point_lookup(spark, tmp_path):
     assert st.as_dataframe().count() == 2  # one row per (entity, key)
 
 
-def test_state_upsert_leaves_other_partitions_untouched(spark, tmp_path):
-    """The bucketed layout's point: upserting one key must not rewrite files
-    belonging to other (entity_type, bucket) partitions (VERDICT.md next #6)."""
+def test_state_upsert_leaves_other_keys_untouched(spark, tmp_path):
+    """An upsert replaces its own key's document and nothing else: the files
+    of other keys -- same key under another entity type included -- keep
+    their inode and mtime, and no temp file survives a committed write."""
     import os
 
     st = StateStore(spark, str(tmp_path / "state"))
     st.save_allowed_columns("t1", "a,b")
+    st.save_last_error("t1", "boom")
     st.save_last_error("t2", "boom")
 
-    def files_of(entity, key):
-        d = st._partition_dir(entity, key)
-        return {
-            f: os.stat(os.path.join(d, f)).st_mtime_ns
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
+    def stat_of(entity, key):
+        s = os.stat(st._doc_path(entity, key))
+        return s.st_ino, s.st_mtime_ns
 
-    before_t1 = files_of("AllowedColumns", "t1")
-    before_t2 = files_of("LastError", "t2")
-    st.save_last_error("t2", "boom again")  # different entity partition
-    assert files_of("AllowedColumns", "t1") == before_t1  # bytes untouched
-    assert files_of("LastError", "t2") != before_t2       # target rewritten
+    others = {("AllowedColumns", "t1"), ("LastError", "t1")}
+    before = {k: stat_of(*k) for k in others}
+    before_t2 = stat_of("LastError", "t2")
+    st.save_last_error("t2", "boom again")
+    assert {k: stat_of(*k) for k in others} == before  # bytes untouched
+    assert stat_of("LastError", "t2") != before_t2      # target replaced
     assert st.get_allowed_columns("t1") == "a,b"
+    assert st.get("LastError", "t1") == "boom"
     assert st.get("LastError", "t2") == "boom again"
+    assert sorted(os.listdir(os.path.dirname(st._doc_path("LastError", "t2")))) \
+        == ["t1.json", "t2.json"]
 
 
 def test_state_upsert_incoming_wins_under_clock_skew(spark, tmp_path):
     """Last-writer-wins is CALL order, not stored-timestamp order (ADVICE
-    r06 #2): an existing row stamped in the FUTURE (skewed writer clock)
+    r06 #2): a stored document stamped in the FUTURE (skewed writer clock)
     must still lose to the incoming upsert, exactly like a durable entity
-    applying operations in arrival order (EntityFunctions.cs:17-21). Also
-    pins the same-key collision path: two rows for one key in the partition
-    (a crashed writer's leftover) collapse to the incoming value."""
+    applying operations in arrival order (EntityFunctions.cs:17-21)."""
+    import json
     from datetime import datetime
-
-    from sqldataintegrationfunctiontriggerapp_spark.state import (
-        _PART_SCHEMA,
-        _local_df,
-    )
 
     st = StateStore(spark, str(tmp_path / "state"))
     st.save_last_error("t1", "old")
-    part_dir = st._partition_dir("LastError", "t1")
-    # plant a future-stamped row for the SAME key next to the real one
-    future = datetime(2999, 1, 1)
-    _local_df(spark, [("t1", "from the future", future)], _PART_SCHEMA) \
-        .write.mode("append").parquet(part_dir)
+    with open(st._doc_path("LastError", "t1"), "w") as f:
+        json.dump({"value": "from the future", "updated_at": "2999-01-01T00:00:00"}, f)
     st.save_last_error("t1", "incoming")
     assert st.get("LastError", "t1") == "incoming"
-    # one row per key survives the merge, future stamp notwithstanding
     rows = st.as_dataframe().where("key = 't1'").collect()
     assert len(rows) == 1 and rows[0]["value"] == "incoming"
+    assert rows[0]["updated_at"] < datetime(2999, 1, 1)
+
+
+def test_state_keys_are_quoted_into_file_names(spark, tmp_path):
+    """Keys are arbitrary table names: path separators and leading dots
+    stay inside one file name and round-trip through as_dataframe."""
+    st = StateStore(spark, str(tmp_path / "state"))
+    keys = ["dbo/orders", ".hidden", "[sales].[x y]"]
+    for k in keys:
+        st.save_allowed_columns(k, k.upper())
+    assert [st.get_allowed_columns(k) for k in keys] == [k.upper() for k in keys]
+    got = {(r["key"], r["value"]) for r in st.as_dataframe().collect()}
+    assert got == {(k, k.upper()) for k in keys}
+
+
+def test_state_ignores_leftover_temp_files(spark, tmp_path):
+    """A writer killed before its rename leaves a temp file next to the
+    document; readers see only committed documents."""
+    st = StateStore(spark, str(tmp_path / "state"))
+    st.save_allowed_columns("t1", "a,b")
+    doc = st._doc_path("AllowedColumns", "t1")
+    with open(doc + ".tmp.0123abcd", "w") as f:
+        f.write('{"value": "a,b,c,d", "upd')   # torn: never committed
+    with open(st._doc_path("AllowedColumns", "t2") + ".tmp.4567ef", "w") as f:
+        f.write('{"value": "x"')                # a key that never committed
+    assert st.get_allowed_columns("t1") == "a,b"
+    assert st.get_allowed_columns("t2") is None
+    rows = st.as_dataframe().collect()
+    assert [(r["key"], r["value"]) for r in rows] == [("t1", "a,b")]
+    st.save_allowed_columns("t2", "x,y")  # a later writer commits normally
+    assert st.get_allowed_columns("t2") == "x,y"
 
 
 def test_cli_shim_get_set(spark, tmp_path):
@@ -136,6 +161,21 @@ def test_retry_loop_stops_on_success_and_notifies_on_threshold():
     assert iters == 3  # stopped when probe returned None (A17)
     assert rearmed == [4]  # count==5 re-armed once (A18)
     assert notifier.sent == [("t1", "retry #2 for t1")]  # A20 threshold
+
+
+def test_step_times_out_outside_run_retry_loop():
+    """A19 holds for a controller driven one step at a time: the first step
+    starts the clock, and a step past total_retry_timeout_hours stops."""
+    ctl = RetryController(
+        EngineSettings(total_retry_timeout_hours=1),
+        "t1",
+        probe_attempt_count=lambda: 3,
+    )
+    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    assert ctl.step(t0)
+    assert ctl.step(t0 + timedelta(minutes=59))
+    assert not ctl.step(t0 + timedelta(hours=1, minutes=1))
+    assert ctl.retry_count == 2
 
 
 def test_notifier_throttles_six_hours():
